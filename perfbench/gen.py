@@ -5,8 +5,6 @@ Every generator writes its files under one directory plus a
 ``checks.py`` never have to trust the program's own output.  The same
 seed gives byte-identical files; a different seed gives different ones.
 
-    python3 perfbench/gen.py --seed 7 --out /tmp/inputs   # all inputs
-
 Four input sets:
 
 - ``etl``:    the FIXTURES.md section 1 record (14 fields plus an ``id``)
@@ -24,7 +22,6 @@ Four input sets:
 
 from __future__ import annotations
 
-import argparse
 import datetime as dt
 import json
 import os
@@ -351,16 +348,3 @@ GENERATORS = {"etl": gen_etl, "tpch": gen_tpch, "sa": gen_sa, "stream": gen_stre
 def generate(out: str, seed: int, sets: list[str]) -> dict:
     """Write each named input set under ``out/<set>``; return manifests."""
     return {s: GENERATORS[s](os.path.join(out, s), seed) for s in sets}
-
-
-def main() -> None:
-    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
-    ap.add_argument("--seed", type=int, required=True)
-    ap.add_argument("--out", required=True)
-    ap.add_argument("--sets", default=",".join(GENERATORS))
-    a = ap.parse_args()
-    generate(a.out, a.seed, a.sets.split(","))
-
-
-if __name__ == "__main__":
-    main()

@@ -46,6 +46,9 @@ WORKLOADS = {
     "etl_analytics": (("etl", "tpch"), "tpch"),
     "curate_stream": (("sa", "stream"), "sa"),
 }
+# a run must end within 180 s.  An untraced worker takes about 50 s on
+# a 4-core host; a traced one bounds its own length (worker.DRAIN_UNTIL_S),
+# taking 60-135 s, so this is a backstop for a hung worker
 CHILD_TIMEOUT_S = 170
 SAMPLE_S = 0.1  # memory sampling period
 # driver heap for every workload (the program's own SPARK_GRAFT_DRIVER_MEM
@@ -227,6 +230,18 @@ def check_tasks(pass_: dict, manifests: dict, expected: dict) -> list:
     return [task(p) for p in pass_["parts"]]
 
 
+def check_problems(futures: list) -> list[str]:
+    """The problems that one pass's checks found.  A check that raises,
+    as it may on malformed output, counts as a problem of the pass."""
+    problems = []
+    for f in futures:
+        try:
+            problems += f.result()
+        except Exception as exc:
+            problems.append(f"output check raised {type(exc).__name__}: {exc}")
+    return problems
+
+
 def run_one(workload: str, seed: int, seconds: float, trace: bool) -> dict:
     base = os.path.join(os.getcwd(), ".perfbench")
     work = os.path.join(base, f"{workload}-s{seed}-p{os.getpid()}")
@@ -274,7 +289,7 @@ def run_one(workload: str, seed: int, seconds: float, trace: bool) -> dict:
                          for fn, args in check_tasks(p, manifests, expected)]
                 for p in res["passes"] if not p["error"]}
         for p in res["passes"]:
-            bad = [p["error"]] if p["error"] else [b for f in futs[p["k"]] for b in f.result()]
+            bad = [p["error"]] if p["error"] else check_problems(futs[p["k"]])
             failed += bool(bad)
             problems += [f"pass {p['k']} ({p['kind']}): {b}" for b in bad]
         phase("output checks; passes " + ", ".join(

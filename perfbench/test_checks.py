@@ -135,6 +135,20 @@ def test_stream_survivor_corruption_flagged(tmp_path):
     assert checks.check_stream(str(tmp_path / "bad"), manifest)
 
 
+def test_check_that_raises_counts_as_failed(tmp_path):
+    from concurrent.futures import ThreadPoolExecutor
+
+    import run
+
+    manifest = gen.gen_stream(str(tmp_path / "in"), SEED, {**gen.SIZES["stream"], "files": 1})
+    # an output without the doc_id column makes check_stream raise
+    _write(duckdb.connect(), "SELECT 1 AS id", str(tmp_path / "bad" / "stream"))
+    with ThreadPoolExecutor(1) as pool:
+        futs = [pool.submit(checks.check_stream, str(tmp_path / "bad"), manifest)]
+        problems = run.check_problems(futs)
+    assert problems and "raised ValueError" in problems[0]
+
+
 def test_generators_are_seeded(tmp_path):
     a = gen.gen_stream(str(tmp_path / "a"), 1, gen.SIZES["stream"])
     b = gen.gen_stream(str(tmp_path / "b"), 1, gen.SIZES["stream"])

@@ -64,8 +64,19 @@ class Spans:
 
 
 def read_event_log(log_dir: str) -> dict:
-    """Jobs and tasks from the (uncompressed) Spark event log in ``log_dir``."""
-    jobs, tasks = [], []
+    """Jobs, tasks and SQL executions from the (uncompressed) Spark event
+    log in ``log_dir``."""
+    jobs, tasks, execs = [], [], []
+    stage_sql: dict[int, object] = {}  # stage id -> its job's SQL execution id
+    file_acc: set[int] = set()  # accumulators of the scans' "size of files read"
+    acc_updates: list[tuple[int, int, int]] = []  # (execution, accumulator, bytes)
+
+    def plan_metrics(node: dict) -> None:
+        file_acc.update(m["accumulatorId"] for m in node["metrics"]
+                        if m["name"] == "size of files read")
+        for child in node["children"]:
+            plan_metrics(child)
+
     # Spark 4 writes a rolling log: a directory of event files per app
     for path in sorted(glob.glob(os.path.join(log_dir, "**", "events_*"), recursive=True)):
         with open(path) as fh:
@@ -73,12 +84,22 @@ def read_event_log(log_dir: str) -> dict:
                 ev = json.loads(line)
                 kind = ev.get("Event")
                 if kind == "SparkListenerJobStart":
+                    sql = (ev.get("Properties") or {}).get("spark.sql.execution.id")
                     jobs.append({"id": ev["Job ID"], "t": ev["Submission Time"] / 1000.0})
+                    stage_sql.update((s, sql) for s in ev["Stage IDs"])
+                elif kind.endswith("SQLExecutionStart"):
+                    execs.append({"id": ev["executionId"], "t": ev["time"] / 1000.0})
+                    plan_metrics(ev["sparkPlanInfo"])
+                elif kind.endswith("SQLAdaptiveExecutionUpdate"):
+                    plan_metrics(ev["sparkPlanInfo"])
+                elif kind.endswith("DriverAccumUpdates"):
+                    acc_updates += [(ev["executionId"], a, v) for a, v in ev["accumUpdates"]]
                 elif kind == "SparkListenerTaskEnd":
                     info, m = ev["Task Info"], ev.get("Task Metrics") or {}
                     sr = m.get("Shuffle Read Metrics") or {}
                     tasks.append({
                         "stage": (ev["Stage ID"], ev["Stage Attempt ID"]),
+                        "sql": stage_sql.get(ev["Stage ID"]),
                         "launch": info["Launch Time"] / 1000.0,
                         "dur": (info["Finish Time"] - info["Launch Time"]) / 1000.0,
                         "failed": bool(info.get("Failed")) or
@@ -90,7 +111,13 @@ def read_event_log(log_dir: str) -> dict:
                         "sr": sr.get("Remote Bytes Read", 0) + sr.get("Local Bytes Read", 0),
                         "spill": m.get("Memory Bytes Spilled", 0) + m.get("Disk Bytes Spilled", 0),
                     })
-    return {"jobs": jobs, "tasks": tasks}
+    scan_bytes: dict[int, int] = {}
+    for ex, acc, v in acc_updates:
+        if acc in file_acc:
+            scan_bytes[ex] = scan_bytes.get(ex, 0) + v
+    for e in execs:
+        e["scan_bytes"] = scan_bytes.get(e["id"], 0)
+    return {"jobs": jobs, "tasks": tasks, "execs": execs}
 
 
 def jobs_in(log: dict, start: float, end: float) -> int:
@@ -98,8 +125,19 @@ def jobs_in(log: dict, start: float, end: float) -> int:
     return sum(1 for j in log["jobs"] if start <= j["t"] <= end)
 
 
-def input_bytes_in(log: dict, start: float, end: float) -> int:
-    return sum(t["in"] for t in log["tasks"] if start <= t["launch"] <= end)
+def file_bytes_in(log: dict, start: float, end: float) -> int:
+    """Bytes of input files read inside a wall-clock window.
+
+    A task's ``Input Metrics`` also count reads of cached and locally
+    checkpointed blocks, so inside SQL executions the file scans' own
+    "size of files read" is summed instead.  Jobs outside any SQL
+    execution (schema inference) read their files directly and count
+    their tasks' input bytes.
+    """
+    scans = sum(e["scan_bytes"] for e in log["execs"] if start <= e["t"] <= end)
+    direct = sum(t["in"] for t in log["tasks"]
+                 if t["sql"] is None and start <= t["launch"] <= end)
+    return scans + direct
 
 
 def session_metrics(log: dict, start: float, end: float, cores: int) -> dict[str, float]:
@@ -142,6 +180,7 @@ def make_progress_listener(store: list):
             state = p.stateOperators or []
             store.append({
                 "t": time.time(),
+                "run": p.runId,
                 "batch": p.batchId,
                 "rows": p.numInputRows,
                 "ms": dict(p.durationMs),
@@ -156,6 +195,23 @@ def make_progress_listener(store: list):
             pass
 
     return _Progress()
+
+
+def drains(progress: list[dict]) -> list[list[dict]]:
+    """Micro-batches grouped by query run, in the order the runs started;
+    each run of the stream config drains the backlog once."""
+    runs: dict[str, list[dict]] = {}
+    for b in progress:
+        runs.setdefault(b["run"], []).append(b)
+    return list(runs.values())
+
+
+def latency_samples(progress: list[dict]) -> list[float]:
+    """``triggerExecution`` seconds of the steady micro-batches: the first
+    drain (the cold pass: JIT, codegen) and batch 0 of every drain (a
+    fresh checkpoint and empty state) are one-offs and left out."""
+    return [b["ms"].get("triggerExecution", 0) / 1000.0
+            for d in drains(progress)[1:] for b in d if b["batch"] > 0]
 
 
 def stream_metrics(batches: list[dict]) -> dict[str, float]:

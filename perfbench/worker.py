@@ -10,9 +10,10 @@ registry for the analytics mix.  Every pass writes its outputs under
 
 With ``--trace 1`` the session also writes Spark's event log and a
 streaming listener records micro-batch progress; after the warm passes
-one pass runs inside spans, one more runs without, stream-only drains
-follow until 100 micro-batches were seen, and each layer's public
-functions are timed on checkpointed inputs (see ``layer_*`` below).
+one pass runs inside spans and one more without, each layer's public
+functions are timed on checkpointed inputs (see ``layer_*`` below), and
+stream-only drains follow until 100 steady micro-batches were seen or
+the time budget for the traced run is spent.
 """
 
 from __future__ import annotations
@@ -255,7 +256,12 @@ def layer_sa(spark, inputs: str, scratch: str, spans: tracing.Spans) -> dict:
 
 
 LAYER_CALLS = {"etl_analytics": layer_etl, "curate_stream": layer_sa}
+# steady micro-batches wanted for the latency tail: at least 10 beyond p90
 STREAM_SAMPLES = 100
+# no drain starts that would end later than this after the process
+# started, so that a slow host gives fewer latency samples (see
+# stream.batch_samples) rather than a run that overruns run.py's limit
+DRAIN_UNTIL_S = 140
 
 # the config pipelines whose reads count toward documents.input_scans,
 # with the input paths they read
@@ -273,7 +279,7 @@ def disk_bytes(path: str) -> int:
 
 
 def trace_metrics(a, spans: tracing.Spans, log: dict, progress: list,
-                  warm: list[float], layers: dict, cores: int) -> dict:
+                  untraced_s: float, layers: dict, cores: int) -> dict:
     traced = spans.get("pass.traced")
     m = dict(layers)
     tags = CONFIG_INPUTS[a.workload]
@@ -284,7 +290,7 @@ def trace_metrics(a, spans: tracing.Spans, log: dict, progress: list,
                                            for c in comp))
     runs = [spans.get(f"pipeline.run.{t}") for t in tags]
     m["pipeline.jobs"] = float(sum(tracing.jobs_in(log, r["start"], r["end"]) for r in runs))
-    read = sum(tracing.input_bytes_in(log, r["start"], r["end"]) for r in runs)
+    read = sum(tracing.file_bytes_in(log, r["start"], r["end"]) for r in runs)
     disk = sum(disk_bytes(os.path.join(a.inputs, p)) for ps in tags.values() for p in ps)
     m["documents.input_read_mb"] = read / 2**20
     m["documents.input_disk_mb"] = disk / 2**20
@@ -292,25 +298,18 @@ def trace_metrics(a, spans: tracing.Spans, log: dict, progress: list,
     for q in QUERY_MIX:
         m[f"queries.{q}_s"] = spans.seconds(f"part.{q}") if a.workload == "etl_analytics" else 0.0
     if a.workload == "curate_stream":
-        # every drain starts a fresh checkpoint, so batch ids restart at 0;
         # the traced drain is the one whose first batch falls in its span
-        drains: list[list[dict]] = []
-        for b in progress:
-            if b["batch"] == 0 or not drains:
-                drains.append([])
-            drains[-1].append(b)
         st = spans.get("part.stream")
-        m.update(tracing.stream_metrics(
-            next(d for d in drains if st["start"] <= d[0]["t"] <= st["end"])))
-        # every drain of the process (cold, warm, traced) feeds the tail
-        lat = sorted(b["ms"].get("triggerExecution", 0) / 1000.0 for b in progress)
+        m.update(tracing.stream_metrics(next(
+            d for d in tracing.drains(progress) if st["start"] <= d[0]["t"] <= st["end"])))
+        lat = tracing.latency_samples(progress)
         qs = statistics.quantiles(lat, n=10) if len(lat) > 1 else lat * 9
         m["stream.batch_p50_s"] = statistics.median(lat)
         m["stream.batch_p90_s"] = qs[8]
         m["stream.batch_samples"] = float(len(lat))
     m.update(tracing.session_metrics(log, traced["start"], traced["end"], cores))
     m["trace.pass_s"] = traced["end"] - traced["start"]
-    m["trace.run_s"] = statistics.median(warm)
+    m["trace.run_s"] = untraced_s
     m["trace.overhead_s"] = m["trace.pass_s"] - m["trace.run_s"]
     return m
 
@@ -325,6 +324,7 @@ def main() -> None:
     ap.add_argument("--result", required=True)
     a = ap.parse_args()
 
+    started = time.time()
     work = os.environ["PERFBENCH_WORK"]
     conf = {
         "spark.sql.warehouse.dir": os.path.join(work, "warehouse"),
@@ -376,17 +376,19 @@ def main() -> None:
     if a.trace:
         spans = tracing.Spans(a.workload)
         do_pass("traced", spans)
-        # one more untraced pass, so warm passes sit on both sides of it
+        # the untraced pass to compare with runs after the traced one:
+        # passes still speed up after the first warm one
         do_pass("warm")
-        # extra stream-only drains until the batch-latency tail has at
-        # least 10 samples beyond p90
-        while progress and len(progress) < STREAM_SAMPLES:
-            do_pass("drain", parts=("stream",))
+        untraced_s = result["passes"][-1]["s"]
         layers = LAYER_CALLS[a.workload](spark, a.inputs, os.path.join(a.out, "layers"), spans)
+        # stream-only drains for the batch-latency tail; the last pass's
+        # length (at first a whole pass's) bounds the next drain's
+        while (progress and len(tracing.latency_samples(progress)) < STREAM_SAMPLES
+               and time.time() - started + result["passes"][-1]["s"] <= DRAIN_UNTIL_S):
+            do_pass("drain", parts=("stream",))
         spark.stop()  # flushes and closes the event log
         log = tracing.read_event_log(os.path.join(work, "eventlog"))
-        warm = [p["s"] for p in result["passes"] if p["kind"] == "warm"]
-        result["layers"] = trace_metrics(a, spans, log, progress, warm, layers, cores)
+        result["layers"] = trace_metrics(a, spans, log, progress, untraced_s, layers, cores)
         result["self_s"] = spans.self_times()
         spans.write(os.path.join(work, "spans.jsonl"))
     else:
