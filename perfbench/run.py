@@ -25,6 +25,7 @@ kept in ``.perfbench/trace/``.
 from __future__ import annotations
 
 import argparse
+import ctypes
 import json
 import multiprocessing
 import os
@@ -64,18 +65,24 @@ def _stat(pid: int) -> list[str]:
         return fh.read().rsplit(")", 1)[1].split()
 
 
-def _pids() -> list[int]:
-    return [int(e) for e in os.listdir("/proc") if e.isdigit()]
+def _procs() -> dict[int, tuple[int, int, str]]:
+    """Every process, zombies included: pid -> (parent pid, session, state)."""
+    out = {}
+    for e in os.listdir("/proc"):
+        if e.isdigit():
+            try:
+                f = _stat(int(e))
+                out[int(e)] = (int(f[1]), int(f[3]), f[0])
+            except (OSError, IndexError, ValueError):
+                continue  # the process ended between listing and reading
+    return out
 
 
 def descendants(pid: int) -> list[int]:
     """``pid`` and every process below it."""
     children: dict[int, list[int]] = {}
-    for p in _pids():
-        try:
-            children.setdefault(int(_stat(p)[1]), []).append(p)
-        except (OSError, IndexError, ValueError):
-            continue
+    for p, (ppid, _, _) in _procs().items():
+        children.setdefault(ppid, []).append(p)
     out, todo = [], [pid]
     while todo:
         p = todo.pop()
@@ -84,17 +91,39 @@ def descendants(pid: int) -> list[int]:
     return out
 
 
-def group_members(pgid: int) -> list[int]:
-    """Live (non-zombie) processes of process group ``pgid``."""
-    out = []
-    for p in _pids():
-        try:
-            fields = _stat(p)
-        except (OSError, IndexError):
-            continue
-        if int(fields[2]) == pgid and fields[0] != "Z":
-            out.append(p)
-    return out
+def session_members(sid: int) -> list[tuple[int, int, str]]:
+    """(pid, parent pid, state) of every process of session ``sid``."""
+    return [(p, ppid, st) for p, (ppid, s, st) in _procs().items() if s == sid]
+
+
+def become_subreaper() -> None:
+    """Have the processes orphaned below this one (the JVM, pyspark's
+    daemon and workers, once their parent has exited) reparented here
+    instead of to init, so that ``reap`` can wait for every one of them."""
+    PR_SET_CHILD_SUBREAPER = 36
+    if ctypes.CDLL(None, use_errno=True).prctl(PR_SET_CHILD_SUBREAPER, 1, 0, 0, 0) != 0:
+        raise OSError(ctypes.get_errno(), "prctl(PR_SET_CHILD_SUBREAPER) failed")
+
+
+def reap(members, deadline: float) -> None:
+    """Kill the processes ``members()`` lists and wait until each has
+    ended and, where it is a child of this process, been reaped."""
+    me = os.getpid()
+    while True:
+        procs = members()
+        if not procs:
+            return
+        if time.monotonic() > deadline:
+            raise RuntimeError(f"processes still running: {procs}")
+        for pid, ppid, state in procs:
+            try:
+                if state != "Z":
+                    os.kill(pid, signal.SIGKILL)
+                if ppid == me:
+                    os.waitpid(pid, os.WNOHANG)
+            except (ProcessLookupError, ChildProcessError):
+                pass
+        time.sleep(0.05)
 
 
 def _exe(pid: int) -> str:
@@ -134,7 +163,7 @@ def tree_mem_bytes(pids: list[int]) -> int:
 
 
 class Child:
-    """A worker process in its own process group, with its READY time
+    """A worker process in a session of its own, with its READY time
     and the peak resident memory of its process tree."""
 
     def __init__(self, args: list[str], env: dict, cwd: str):
@@ -171,19 +200,22 @@ class Child:
             self.stop()
 
     def stop(self) -> None:
-        """Kill whatever is left of the process group (the JVM, Python
-        workers) and wait until every member has ended."""
+        """Kill whatever is left of the worker's session and wait until
+        every member has ended.  A session, not a process group: pyspark's
+        daemon moves itself and the Python workers it forks into a group
+        of their own."""
+        sid = self.proc.pid
         try:
-            os.killpg(self.proc.pid, signal.SIGKILL)
+            os.killpg(sid, signal.SIGKILL)
         except ProcessLookupError:
             pass
         self.proc.wait()
-        deadline = time.monotonic() + 30
-        while group_members(self.proc.pid) and time.monotonic() < deadline:
-            time.sleep(0.05)
-        self._done.set()
-        for t in self._threads:
-            t.join()
+        try:
+            reap(lambda: session_members(sid), time.monotonic() + 30)
+        finally:
+            self._done.set()
+            for t in self._threads:
+                t.join()
 
     @property
     def setup_s(self) -> float:
@@ -263,9 +295,12 @@ def run_one(workload: str, seed: int, seconds: float, trace: bool) -> dict:
         print(f"[perfbench] {workload}: {name} done at {time.perf_counter() - t0:.1f} s",
               file=sys.stderr, flush=True)
 
-    # helper processes for the untimed work: generation, oracles, checks
+    # helper processes for the untimed work: generation, oracles, checks.
+    # Forked, not spawned: a fork pool starts all its workers at the first
+    # submit, before this process runs any thread, and it needs no
+    # resource-tracker process, which would outlive the run
     pool = ProcessPoolExecutor(max_workers=min(4, int(env["SPARK_GRAFT_CPUS"])),
-                               mp_context=multiprocessing.get_context("spawn"))
+                               mp_context=multiprocessing.get_context("fork"))
     try:
         inputs = os.path.join(work, "inputs")
         manifests, expected = prepare(pool, workload, inputs, seed)
@@ -342,6 +377,7 @@ def main() -> int:
     a = ap.parse_args()
     # on SIGTERM, unwind through the finally blocks that stop the worker
     signal.signal(signal.SIGTERM, lambda *_: sys.exit(128 + signal.SIGTERM))
+    become_subreaper()
     if not os.path.isdir(os.path.join(ROOT, "chewdata_spark")):
         print(f"no chewdata_spark package next to {HERE}: run from a full checkout",
               file=sys.stderr)
