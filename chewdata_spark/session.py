@@ -7,6 +7,30 @@ locally (set to 2-3x total executor cores on a real cluster), and the
 broadcast threshold is generous because our dimension tables (region,
 nation, supplier, part at typical ratios) are tiny next to the fact
 tables.
+
+Generated code is cached for the whole session.  Every config step list
+compiles to one Catalyst plan that runs in whole-stage codegen, and
+compiled classes only pay off when a re-run reuses them.  Spark's class
+cache holds 100 entries; one pass of perfbench's ``curate_stream``
+workload (SA-curation config plus a streaming dedup drain) generates
+about 300 distinct classes and one ``etl_analytics`` pass about 115, so
+at the default every warm pass recompiled nearly all of them with
+Janino (about 7 ms each) and JIT-compiled them again.  The cache holds
+``CODEGEN_CACHE_ENTRIES`` = 2000 classes: the per-pass working sets
+with headroom for long sessions (``bench.py``, the test suite) that run
+many plans.  Classes are no longer loaded again on every pass, so JVM
+metaspace grows less, not more: over six ``curate_stream`` passes on a
+4-core host it went from 170 to 178 MB, against 170 to 179 MB (183 MB
+at its peak) at Spark's defaults.  Generated class names also leave out
+the whole-stage codegen id: AQE numbers stages in the order it plans
+them, which changes from run to run, and an id in the name makes a
+re-run of the same plan miss the cache.
+
+The cache size is a static conf, read once per JVM when the first class
+is generated, so a session not built here keeps Spark's 100 entries,
+and so does one built here in a JVM whose session was built elsewhere.
+The driver contract ``__spark_entry__.py`` run against a caller's
+vanilla session is one such case.
 """
 
 from __future__ import annotations
@@ -14,6 +38,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# spark.sql.codegen.cache.maxEntries (Spark's default: 100)
+CODEGEN_CACHE_ENTRIES = 2000
 
 
 def _cgroup_limit_paths(proc_cgroup: str | None = None) -> list[str]:
@@ -148,6 +175,10 @@ def get_spark(
         # shuffle blocks after a driver GC, and a big heap may not GC
         # for a long time on its own
         .config("spark.cleaner.periodicGC.interval", "5min")
+        # warm re-runs reuse their generated classes: see the module
+        # docstring for the sizing and why stage ids leave class names
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        .config("spark.sql.codegen.useIdInClassName", "false")
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():

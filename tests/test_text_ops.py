@@ -265,3 +265,41 @@ def test_blocklist_hits_exact_sequence_semantics(spark):
         (3, "drop the table"): 1,
         (4, "vector"): 1,
     }
+
+
+def test_normalize_oracle_keeps_line_breaks(spark, tmp_path):
+    """The registry's DuckDB oracle for ``normalize_documents`` gives the
+    program's rows on multi-line documents: line breaks survive, spaces
+    around them go, and 3+ blank lines fold to one empty line."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from chewdata_spark.queries.text_queries import (
+        _normalize_sql,
+        normalize_documents,
+    )
+    from tests.oracle import canonical_rows
+
+    texts = [
+        "first line \n second\tline\n\n\n\nfourth “line”",
+        "a  b \n c\n\n\n\n\nd",
+        "one\ntwo\n\nthree\n",
+        " padded  \n\n  ",
+        "already clean",
+    ]
+    path = tmp_path / "documents.parquet"
+    pq.write_table(pa.table({
+        "doc_id": pa.array(range(len(texts)), pa.int64()),
+        "text": texts,
+    }), str(path))
+
+    df = normalize_documents(spark, str(tmp_path))
+    got = df.collect()
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM read_parquet('{path}')")
+    rel = con.sql(_normalize_sql())
+    want = canonical_rows(list(rel.columns), rel.fetchall())
+    assert canonical_rows(df.columns, [tuple(r) for r in got]) == want
+    by_id = {r["doc_id"]: r["norm_text"] for r in got}
+    assert by_id[0] == "first line\nsecond line\n\nfourth \"line\""
